@@ -11,6 +11,13 @@ Spark-first:
   groupBy; only bucket-mates are compared;
 - SimHash: 64-bit fingerprint + banded Hamming candidate join.
 
+The MinHash and SimHash paths each have a portable md5 twin whose whole
+pipeline is value-hash-proven against its DuckDB oracle (bottom of the
+module). Twins share stages, not pipelines: shingles, signatures,
+bucket caps, packed votes, candidate joins and the exact verify each
+have one implementation below, while the fast and portable pipelines
+differ where they must (hash family, hot-bucket policy, score type).
+
 Scale notes (100 TB): every operator here is shuffle-bounded by
 |shingles| or |buckets|, not |docs|². The shingle inverted index is the
 classic skew risk (a stop-shingle shared by millions of docs explodes the
@@ -22,9 +29,13 @@ handles comfortably.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from collections.abc import Callable
+from functools import reduce
 
-from ..io import load_table, ngram_explode
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.window import Window as W
+
+from ..io import fan_out, load_table, ngram_explode
 
 # Every "group then pair" operator needs a cap because within-group pairing
 # is QUADRATIC in group size. The caps are derived from per-group pair
@@ -132,10 +143,106 @@ def _bucket_pairs(
     )
 
 
+def _join_pairs(capped: DataFrame, keys: list[str], id_col: str) -> DataFrame:
+    """Ordered distinct (d1 < d2) id pairs within each ``_cap_buckets``
+    bucket, via the banded self-join on ``keys``.
+
+    Stays a self-join, NOT ``_bucket_pairs``: this cap is the broadcast
+    anti-join guard, so the banded keys are not already shuffled on the
+    bucket key and the explode's groupBy would ADD an exchange (A/B r10:
+    +12% on dedup_minhash_lsh, +4% on dedup_simhash), unlike the
+    portables whose row_number cap pre-shuffles. Round 14 A/B'd
+    ``_bucket_pairs`` on dedup_embedding_cosine too and it LOST 3/3
+    (2.3-2.9s -> 3.1-5.7s): sign-band buckets average ~1 member (16k
+    rows over ~16k buckets), so collect_list + sort_array + explode over
+    millions of near-singleton groups costs more than the slim self-join
+    — the same anti-regime documented on ``_bucket_pairs`` for the
+    shingle inverted index.
+    """
+    l, r = capped.alias("l"), capped.alias("r")
+    same_bucket = reduce(
+        lambda a, b: a & b, [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    )
+    return (
+        l.join(r, same_bucket & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
+        .select(F.col(f"l.{id_col}").alias("d1"), F.col(f"r.{id_col}").alias("d2"))
+        .distinct()
+    )
+
+
+def _cap_first(buckets: DataFrame, keys: list[str], id_col: str, cap: int) -> DataFrame:
+    """Keep each bucket's first ``cap`` members by ``id_col`` — the
+    deterministic cap of the portable LSH twins, which their oracles
+    mirror with the same ROW_NUMBER window. Unlike ``_cap_buckets`` a
+    hot bucket is truncated rather than dropped (a boilerplate band key
+    contributes C(cap,2) pairs, never C(bucket,2)), and the window's
+    shuffle on ``keys`` is the one ``_bucket_pairs`` then reuses."""
+    return (
+        buckets.withColumn(
+            "rn", F.row_number().over(W.partitionBy(*keys).orderBy(id_col))
+        )
+        .filter(F.col("rn") <= cap)
+        .drop("rn")
+    )
+
+
+def _pair_docs(cand: DataFrame) -> DataFrame:
+    """Distinct ``doc_id``s appearing on either side of a (d1, d2) frame."""
+    return (
+        cand.select(F.col("d1").alias("doc_id"))
+        .union(cand.select(F.col("d2").alias("doc_id")))
+        .distinct()
+    )
+
+
+def _packed_votes(
+    rows: DataFrame, vote: Callable[[int], Column], total: Column
+) -> DataFrame:
+    """Per-``doc_id`` SimHash votes, packed: the positive-bit counts
+    t_j = SUM(vote(j)) packed TWO per 64-bit lane word
+    (t_{2p} << 32 | t_{2p+1} — 32 aggregate sums instead of 64 signed
+    +-1 sums) plus ``__n``, the ``total`` weight every vote counts
+    against. The signed vote is s_j = 2*t_j - n, so the caller's sign
+    test on s_j becomes a compare of 2 * ``_lane(j)`` with ``__n``; the
+    fingerprint bits are identical (verified 0 mismatches over the full
+    sf1 corpus; A/B on dedup_simhash warm 2.0 -> 1.7s, first pass
+    4.4 -> 1.8s; tests/test_llm_ops.py::
+    test_simhash_packed_votes_bit_equality pins the portable twin).
+
+    Lane safety: each lane accumulates at most n, so with n < 2^31 the
+    low lane never carries and the packed sum stays under 2^63. n >= 2^31
+    (a >= 2 GiB single document — beyond a Spark string cell anyway)
+    raises LOUDLY via the guard below instead of corrupting lanes (the
+    r14 objection to 16-bit lanes)."""
+    voted = rows.groupBy("doc_id").agg(
+        total.alias("__n"),
+        *[
+            F.sum(F.shiftleft(vote(2 * p), 32) + vote(2 * p + 1)).alias(f"t{p}")
+            for p in range(32)
+        ],
+    )
+    return voted.withColumn(
+        "__n",
+        F.expr(
+            "CASE WHEN __n < 2147483648 THEN __n ELSE"
+            " CAST(raise_error('packed SimHash vote lanes require"
+            " < 2^31 tokens per document') AS BIGINT) END"
+        ),
+    )
+
+
+def _lane(j: int) -> Column:
+    """t_j unpacked from its ``_packed_votes`` lane word."""
+    lane = F.col(f"t{j // 2}")
+    return F.shiftright(lane, 32) if j % 2 == 0 else lane.bitwiseAND(F.lit(0xFFFFFFFF))
+
+
 def _shingle_index_fresh(
     spark: SparkSession, sf_dir: str, checkpoint: bool = True
 ) -> DataFrame:
-    """Inverted shingle index built IN-PLAN, per invocation.
+    """(doc_id, shingle:bigint) inverted index of distinct word 3-grams,
+    with frequency capping, built IN-PLAN per invocation. Built-ins
+    only — no UDF, whole-stage codegen.
 
     Rounds 7-13 persisted this index to a /tmp cache keyed on the
     documents parquet fingerprint (the offline/online split a production
@@ -147,14 +254,6 @@ def _shingle_index_fresh(
     ``checkpoint=True`` materializes it once for multi-consumer plans
     (sizes + both join sides); single-consumer callers skip the
     checkpoint barrier (measured a LOSS for one consumer, round 7).
-    """
-    sh = _shingle_index(load_table(spark, sf_dir, "documents"))
-    return sh.localCheckpoint() if checkpoint else sh
-
-
-def _shingle_index(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle:bigint) inverted index of distinct word 3-grams,
-    with frequency capping. Built-ins only — no UDF, whole-stage codegen.
 
     Two deliberate plan choices, measured at sf0.1:
 
@@ -168,7 +267,7 @@ def _shingle_index(docs: DataFrame) -> DataFrame:
       corpus' shingle vocabulary are ~|V|^2 / 2^65 — negligible against a
       near-dup threshold decision.
     """
-    wh = docs.select(
+    wh = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.transform(F.split(F.col("text"), " "), lambda x: F.xxhash64(x)).alias("h"),
     ).filter(F.size("h") >= 3)
@@ -182,7 +281,29 @@ def _shingle_index(docs: DataFrame) -> DataFrame:
     hot = (
         sh.groupBy("shingle").count().filter(F.col("count") > MAX_SHINGLE_DF).select("shingle")
     )
-    return sh.join(F.broadcast(hot), "shingle", "left_anti")
+    sh = sh.join(F.broadcast(hot), "shingle", "left_anti")
+    return sh.localCheckpoint() if checkpoint else sh
+
+
+def _shared_shingles(sh: DataFrame) -> DataFrame:
+    """(d1, d2, shared, n1, n2) for every doc pair sharing >= 1 indexed
+    shingle: shared(a,b) from the inverted-index self-join (shuffle on
+    shingle), n from per-doc distinct-shingle counts. The self-join
+    takes a shuffle_hash hint (the pair explosion makes sort-merge's
+    sorts pure overhead); per-doc sizes are broadcast (tiny relative to
+    the pair set). ``sh`` feeds three consumers here (sizes, both join
+    sides), so callers pass the checkpointed index."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a = sh.alias("a")
+    b = sh.hint("shuffle_hash").alias("b")
+    shared = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .agg(F.count(F.lit(1)).alias("shared"))
+    )
+    s1 = F.broadcast(sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1")))
+    s2 = F.broadcast(sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2")))
+    return shared.join(s1, "d1").join(s2, "d2")
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -202,18 +323,14 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard over candidate pairs sharing >= 1 shingle.
 
-    shared(a,b) comes from the inverted-index self-join (shuffle on
-    shingle); |a| and |b| are per-doc distinct-shingle counts. Jaccard is
+    shared(a,b), |a| and |b| come from ``_shared_shingles``. Jaccard is
     integer arithmetic until the final double division — deterministic in
     both engines.
 
     Plan shape: the shingle index feeds THREE consumers (sizes, both join
     sides) from one in-plan build + localCheckpoint per invocation
     (``_shingle_index_fresh`` — round 14 removed the cross-run /tmp
-    index cache per the no-precomputation rule). The self-join
-    takes a shuffle_hash hint (the pair explosion makes sort-merge's
-    sorts pure overhead); per-doc sizes are broadcast (tiny relative to
-    the pair set).
+    index cache per the no-precomputation rule).
 
     Output is budgeted at ``MAX_PAIRS_PER_DOC`` best partners per doc,
     SYMMETRICALLY (cap rationale above): the scored pairs are viewed
@@ -223,21 +340,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     partner list overflowed. The oracle applies the identical
     construction.
     """
-    sh = _shingle_index_fresh(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.hint("shuffle_hash").alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    s1 = F.broadcast(sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1")))
-    s2 = F.broadcast(sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2")))
-    from pyspark.sql.window import Window as W
-
     scored = (
-        shared.join(s1, "d1").join(s2, "d2")
+        _shared_shingles(_shingle_index_fresh(spark, sf_dir))
         .select(
             "d1",
             "d2",
@@ -275,9 +379,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _minhash_signatures(
-    spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
-) -> DataFrame:
+def _minhash_signatures(sh: DataFrame) -> DataFrame:
     """(doc_id, h0..h{K-1}) — K independent min-hashes per doc.
 
     K permutations are simulated with K seeded xxhash64s of the shingle;
@@ -290,8 +392,6 @@ def _minhash_signatures(
     index here as well is a LOSS (2.9s) — it has one consumer, so the
     materialization buys nothing.
     """
-    if sh is None:
-        sh = _shingle_index_fresh(spark, sf_dir)
     mins = [
         F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
         for i in range(MINHASH_K)
@@ -329,11 +429,7 @@ def _verify_pairs_exact_jaccard(sh: DataFrame, cand: DataFrame) -> DataFrame:
     as well was A/B'd and LOST (+0.6s job-launch latency at sf0.1).
     """
     cand = cand.localCheckpoint()
-    cand_docs = (
-        cand.select(F.col("d1").alias("doc_id"))
-        .union(cand.select(F.col("d2").alias("doc_id")))
-        .distinct()
-    )
+    cand_docs = _pair_docs(cand)
     # One pass over the restricted index produces BOTH the per-doc shingle
     # set and its size; intersection counting then happens JVM-side with
     # array_intersect on the (distinct) 8-byte shingle hashes. Arrays are
@@ -381,7 +477,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # helper's candidate semi-join) — one in-plan build + localCheckpoint
     # per invocation (round 14: cross-run cache removed).
     sh = _shingle_index_fresh(spark, sf_dir)
-    sig = _minhash_signatures(spark, sf_dir, sh)
+    sig = _minhash_signatures(sh)
     bands = F.array(
         *[
             F.struct(
@@ -394,22 +490,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = sig.select("doc_id", F.explode(bands).alias("b")).select(
         "doc_id", F.col("b.band").alias("band"), F.col("b.bhash").alias("bhash")
     )
-    buckets = _cap_buckets(buckets, ["band", "bhash"])
-    # Stays a self-join (NOT _bucket_pairs): this cap is the anti-join
-    # guard, so the banded keys are not already shuffled on the bucket
-    # key — the explode's groupBy would ADD an exchange (A/B r10: +12%),
-    # unlike the portables whose row_number cap pre-shuffles.
-    l, rgt = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(
-            rgt,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bhash") == F.col("r.bhash"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("d1"), F.col("r.doc_id").alias("d2"))
-        .distinct()
-    )
+    cand = _join_pairs(_cap_buckets(buckets, ["band", "bhash"]), ["band", "bhash"], "doc_id")
     sl = sig.select(F.col("doc_id").alias("d1"), *[F.col(f"h{i}").alias(f"l{i}") for i in range(MINHASH_K)])
     sr = sig.select(F.col("doc_id").alias("d2"), *[F.col(f"h{i}").alias(f"r{i}") for i in range(MINHASH_K)])
     matches = sum(
@@ -446,50 +527,22 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
     ).withColumn("wh", F.xxhash64("w"))
-    # Round 15 — packed votes, the dedup2 portable twin's rewrite on the
-    # xxhash64 path: positive-bit counts t_j packed TWO per 64-bit lane
-    # (32 sums instead of 64 conditional +-1 sums) plus the token count
-    # N; the signed vote is s_j = 2*t_j - N, so "s_j > 0" == "2*t_j > N"
-    # and the fingerprint bits are identical (verified 0 mismatches over
-    # the full sf1 corpus; A/B warm 2.0 -> 1.7s, first pass 4.4 -> 1.8s).
-    # Lane safety: each lane accumulates at most N < 2^31 tokens per doc
-    # — enforced LOUDLY below rather than silently corrupting lanes.
+    # Round 15 — packed votes (``_packed_votes``), the portable twin's
+    # rewrite on the xxhash64 path: weight 1 per token, so n is the token
+    # count N and "s_j > 0" == "2*t_j > N".
 
     def _bit(j: int):
         return F.shiftrightunsigned(F.col("wh"), j).bitwiseAND(F.lit(1))
 
-    voted = words.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("__N"),
-        *[
-            F.sum(F.shiftleft(_bit(2 * p), 32) + _bit(2 * p + 1)).alias(f"t{p}")
-            for p in range(32)
-        ],
-    )
-    n_guarded = F.expr(
-        "CASE WHEN __N < 2147483648 THEN __N ELSE"
-        " CAST(raise_error('dedup_simhash: packed vote lanes require"
-        " < 2^31 tokens per document') AS BIGINT) END"
-    )
-
-    def _t(j: int):
-        lane = F.col(f"t{j // 2}")
-        return (
-            F.shiftright(lane, 32)
-            if j % 2 == 0
-            else lane.bitwiseAND(F.lit(0xFFFFFFFF))
-        )
-
+    voted = _packed_votes(words, _bit, F.count(F.lit(1)))
     # Assemble the fingerprint with bitwise OR (addition would overflow the
     # sign bit under ANSI arithmetic when bit 63 is set).
-    from functools import reduce
-
     bit_terms = [
-        F.when(2 * _t(j) > F.col("__Ng"), F.shiftleft(F.lit(1).cast("long"), j))
+        F.when(2 * _lane(j) > F.col("__n"), F.shiftleft(F.lit(1).cast("long"), j))
         .otherwise(F.lit(0).cast("long"))
         for j in range(64)
     ]
     fingerprint = reduce(lambda a, b: a.bitwiseOR(b), bit_terms)
-    voted = voted.withColumn("__Ng", n_guarded)
     # fp (|docs| x 2 longs) feeds banding + both Hamming sides: checkpoint
     # computes the 64-sum groupBy once (4.25s -> 3.44s at sf0.1)
     fp = voted.select("doc_id", fingerprint.alias("simhash")).localCheckpoint()
@@ -507,20 +560,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = fp.select("doc_id", F.explode(band_arr).alias("b")).select(
         "doc_id", "b.band", "b.bits"
     )
-    buckets = _cap_buckets(buckets, ["band", "bits"])
-    # Self-join, not _bucket_pairs — same anti-join-cap rationale as
-    # dedup_minhash_lsh above (A/B r10: explode measured +4%).
-    l, r = buckets.alias("l"), buckets.alias("r")
-    cand = (
-        l.join(
-            r,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bits") == F.col("r.bits"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("d1"), F.col("r.doc_id").alias("d2"))
-        .distinct()
-    )
+    cand = _join_pairs(_cap_buckets(buckets, ["band", "bits"]), ["band", "bits"], "doc_id")
     f1 = fp.select(F.col("doc_id").alias("d1"), F.col("simhash").alias("s1"))
     f2 = fp.select(F.col("doc_id").alias("d2"), F.col("simhash").alias("s2"))
     near = (
@@ -674,22 +714,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     keyed = _cap_buckets(bucketed, ["t", "bucket"], MAX_LSH_BUCKET)
-    # Round 14: the shared row-local C(k,2) explode (_bucket_pairs) was
-    # A/B'd here and LOST 3/3 (2.3-2.9s -> 3.1-5.7s): sign-band buckets
-    # average ~1 member (16k rows over ~16k buckets), so collect_list +
-    # sort_array + explode over millions of near-singleton groups costs
-    # more than the slim self-join — the same anti-regime documented on
-    # _bucket_pairs for the shingle inverted index. The self-join stays.
-    l, r = keyed.alias("el"), keyed.alias("er")
-    cand = (
-        l.join(
-            r,
-            (F.col("el.t") == F.col("er.t"))
-            & (F.col("el.bucket") == F.col("er.bucket"))
-            & (F.col("el.vec_id") < F.col("er.vec_id")),
-        )
-        .select(F.col("el.vec_id").alias("v1"), F.col("er.vec_id").alias("v2"))
-        .distinct()
+    # Self-join, not _bucket_pairs: A/B'd round 14, see _join_pairs.
+    cand = _join_pairs(keyed, ["t", "bucket"], "vec_id").select(
+        F.col("d1").alias("v1"), F.col("d2").alias("v2")
     )
     # Per-vector norms are computed ONCE per vector on the payload sides
     # (|corpus| folds), not per candidate pair — at 61k pairs / 2k vectors
@@ -739,19 +766,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_ngram_jaccard`` (shared index, shuffle_hash pair join,
     broadcast sizes), but the scoring is pure integer — no doubles
     anywhere."""
-    sh = _shingle_index_fresh(spark, sf_dir)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.hint("shuffle_hash").alias("b")
-    shared = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    s1 = F.broadcast(sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1")))
-    s2 = F.broadcast(sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2")))
     return (
-        shared.join(s1, "d1").join(s2, "d2")
+        _shared_shingles(_shingle_index_fresh(spark, sf_dir))
         .select(
             "d1",
             "d2",
@@ -1001,6 +1017,65 @@ PORTABLE_BUCKET_CAP = 64  # bucket members kept (by doc_id; deterministic)
 PORTABLE_JACCARD_PPM = 200_000  # exact-verify threshold
 
 
+def _word_trigrams(docs: DataFrame) -> DataFrame:
+    """Distinct (doc_id, s) word-3-gram set of ``docs`` — the portable
+    twins' shingle set, string-keyed so the oracles rebuild it verbatim.
+    Checkpointed: every consumer reads it at least three times
+    (signatures or the shared self-join, sizes, both verify sides)."""
+    ws = docs.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
+    return ngram_explode(ws, "ws", 3, "s", "doc_id").distinct().localCheckpoint()
+
+
+def _md5_signatures(shingles: DataFrame) -> DataFrame:
+    """(doc_id, sig0..sig{K-1}): the min md5 hex string per salt over a
+    ``_word_trigrams`` set, K MIN aggregates in one groupBy."""
+    return shingles.groupBy("doc_id").agg(
+        *[
+            F.min(F.md5(F.concat(F.lit(f"{k}:"), F.col("s")))).alias(f"sig{k}")
+            for k in range(PORTABLE_MINHASH_K)
+        ]
+    )
+
+
+def _jaccard_ppm(shared: str = "shared") -> Column:
+    """Exact Jaccard in ppm from ``shared`` and the sizes n1, n2 — integer
+    division, the oracles' ``CAST(... AS HUGEINT) ... //`` bit-for-bit."""
+    return F.expr(
+        f"CAST({shared} * 1000000 div (n1 + n2 - {shared}) AS BIGINT)"
+    )
+
+
+def _verify_jaccard_ppm(shingles: DataFrame, cand: DataFrame) -> DataFrame:
+    """Exact word-3-gram Jaccard in ppm for a ``(d1, d2, ...)`` candidate
+    frame -> ``(d1, d2, ..., jaccard_ppm)``: per-doc sizes, the shared
+    count as an equi-join on (doc, shingle), then ``_jaccard_ppm``. A
+    candidate sharing no shingle keeps its row with shared = 0; docs
+    without a 3-gram drop out (no size). The portable twin of
+    ``_verify_pairs_exact_jaccard``; cost is candidate-proportional."""
+    sizes = shingles.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    sa = shingles.select(F.col("doc_id").alias("d1"), "s")
+    sb = shingles.select(F.col("doc_id").alias("d2"), "s")
+    shared = (
+        cand.join(sa, "d1")
+        .join(sb, ["d2", "s"])
+        .groupBy("d1", "d2")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("shared"))
+    )
+    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
+    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
+    keep = [c for c in cand.columns if c not in ("d1", "d2")]
+    return (
+        cand.join(shared, ["d1", "d2"], "left")
+        .join(s1, "d1")
+        .join(s2, "d2")
+        .select(
+            "d1", "d2", *keep, _jaccard_ppm("COALESCE(shared, 0)").alias("jaccard_ppm")
+        )
+    )
+
+
 def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dup pairs with a FULL value-hash oracle
     (module comment): md5 signatures, 4 two-signature bands,
@@ -1014,22 +1089,8 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verify joins the candidate set back to the shingle index on
     the shingle key. No cartesian anywhere.
     """
-    docs = load_table(spark, sf_dir, "documents")
-    ws = docs.select("doc_id", F.split(F.col("text"), " ").alias("ws"))
-    shingles = (
-        ngram_explode(ws, "ws", 3, "s", "doc_id")
-        .distinct()
-        .localCheckpoint()  # feeds signatures, sizes, and both verify sides
-    )
-    sigs = shingles.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{k}:"), F.col("s")))).alias(
-                f"sig{k}"
-            )
-            for k in range(PORTABLE_MINHASH_K)
-        ]
-    )
-    bands = sigs.select(
+    shingles = _word_trigrams(load_table(spark, sf_dir, "documents"))
+    bands = _md5_signatures(shingles).select(
         "doc_id",
         F.explode(
             F.array(
@@ -1045,42 +1106,10 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bk"),
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    from pyspark.sql.window import Window as W
-
-    capped = (
-        bands.withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("band", "key").orderBy("doc_id")
-            ),
-        )
-        .filter(F.col("rn") <= PORTABLE_BUCKET_CAP)
-        .drop("rn")
-    )
+    capped = _cap_first(bands, ["band", "key"], "doc_id", PORTABLE_BUCKET_CAP)
     cand = _bucket_pairs(capped, ["band", "key"], "doc_id")
-    sizes = shingles.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    sa = shingles.select(F.col("doc_id").alias("d1"), "s")
-    sb = shingles.select(F.col("doc_id").alias("d2"), "s")
-    shared = (
-        cand.join(sa, "d1")
-        .join(sb, ["d2", "s"])
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("shared"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
     return (
-        shared.join(s1, "d1")
-        .join(s2, "d2")
-        .select(
-            "d1",
-            "d2",
-            F.expr(
-                "CAST(shared * 1000000 div (n1 + n2 - shared) AS BIGINT)"
-            ).alias("jaccard_ppm"),
-        )
+        _verify_jaccard_ppm(shingles, cand)
         .filter(F.col("jaccard_ppm") >= PORTABLE_JACCARD_PPM)
         .orderBy("d1", "d2")
     )
@@ -1088,15 +1117,35 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERIES["dedup_minhash_portable"] = dedup_minhash_portable
 
-ORACLES["dedup_minhash_portable"] = f"""
-    CREATE OR REPLACE TEMP TABLE pmh_sh AS
+
+def _trigram_table_sql(name: str) -> str:
+    """DuckDB twin of ``_word_trigrams``: a distinct (doc_id, s) table."""
+    return f"""CREATE OR REPLACE TEMP TABLE {name} AS
         SELECT DISTINCT doc_id,
                w[i] || ' ' || w[i + 1] || ' ' || w[i + 2] AS s
         FROM (SELECT doc_id, w,
                      unnest(generate_series(1, len(w) - 2)) AS i
               FROM (SELECT doc_id, string_split(text, ' ') AS w
                     FROM documents)
-              WHERE len(w) >= 3);
+              WHERE len(w) >= 3);"""
+
+
+def _verify_ctes_sql(sh: str, cand: str) -> str:
+    """DuckDB twin of ``_verify_jaccard_ppm``'s sizes and shared counts,
+    over trigram table ``sh`` and candidate table ``cand``."""
+    return f"""WITH sizes AS (
+        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
+        FROM {sh} GROUP BY doc_id),
+    shared AS (
+        SELECT c.d1, c.d2, CAST(COUNT(*) AS BIGINT) AS shared
+        FROM {cand} c
+        JOIN {sh} sa ON sa.doc_id = c.d1
+        JOIN {sh} sb ON sb.doc_id = c.d2 AND sb.s = sa.s
+        GROUP BY c.d1, c.d2)"""
+
+
+ORACLES["dedup_minhash_portable"] = f"""
+    {_trigram_table_sql("pmh_sh")}
     CREATE OR REPLACE TEMP TABLE pmh_sig AS
         SELECT doc_id,
                {", ".join(f"MIN(md5('{k}:' || s)) AS sig{k}" for k in range(PORTABLE_MINHASH_K))}
@@ -1115,15 +1164,7 @@ ORACLES["dedup_minhash_portable"] = f"""
         FROM pmh_capped a
         JOIN pmh_capped b
           ON b.band = a.band AND b.key = a.key AND a.doc_id < b.doc_id;
-    WITH sizes AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
-        FROM pmh_sh GROUP BY doc_id),
-    shared AS (
-        SELECT c.d1, c.d2, CAST(COUNT(*) AS BIGINT) AS shared
-        FROM pmh_cand c
-        JOIN pmh_sh sa ON sa.doc_id = c.d1
-        JOIN pmh_sh sb ON sb.doc_id = c.d2 AND sb.s = sa.s
-        GROUP BY c.d1, c.d2)
+    {_verify_ctes_sql("pmh_sh", "pmh_cand")}
     SELECT sh.d1, sh.d2,
            CAST(CAST(sh.shared AS HUGEINT) * 1000000
                 // (n1.n + n2.n - sh.shared) AS BIGINT) AS jaccard_ppm
@@ -1133,4 +1174,473 @@ ORACLES["dedup_minhash_portable"] = f"""
     WHERE CAST(sh.shared AS HUGEINT) * 1000000
           // (n1.n + n2.n - sh.shared) >= {PORTABLE_JACCARD_PPM}
     ORDER BY sh.d1, sh.d2
+"""
+
+
+# Portable SimHash (round 8c): the SimHash twin with a full value-hash
+# oracle. The xxhash64 sibling (dedup_simhash) stays the fast path.
+# Construction (bit-identical cross-engine):
+#
+# - Per (doc, word): the term count (frequency-weighted votes, like the
+#   sibling) and the word's 64 hash bits, read as 16 md5 hex digits of
+#   4 bits each (Spark ``conv(hex,16,10)`` == DuckDB
+#   ``strpos('0123456789abcdef', c) - 1`` — pinned by the span-plan
+#   lottery precedent).
+# - Vote j = sum over words count * (2*bit_j - 1); fingerprint = the
+#   64-char '0'/'1' string of vote signs in the oracle (a string, not a
+#   long — no sign-bit games, and band keys are plain substrings); Spark
+#   builds the same bits as two 32-bit words (see the query).
+# - Bands: 4 x 16-bit keys; buckets cap at SIMHASH2_BUCKET_CAP members
+#   by doc_id (deterministic C(cap,2) pair bound).
+# - Gate: Hamming <= SIMHASH2_HAM_MAX over the 64 positions (an unrolled
+#   64-term comparison in the oracle).
+# - Verify: exact word-3-gram Jaccard >= SIMHASH2_JACCARD_PPM ppm (the
+#   minhash-portable contract).
+#
+# Scale notes (100 TB): votes are ONE map-side-combinable groupBy over
+# the (doc, word) projection (32 lane sums wide, rows narrow); everything
+# after works on doc-sized fingerprints and cap-bounded candidate pairs.
+# No cartesian, no floats, no collect.
+SIMHASH2_BANDS = 4
+SIMHASH2_BUCKET_CAP = 64
+SIMHASH2_HAM_MAX = 6
+SIMHASH2_JACCARD_PPM = 200_000
+
+
+def dedup_simhash_portable(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Banded 64-bit SimHash near-dup pairs, fully value-hash-proven
+    (section comment). Output: pair, Hamming distance, exact Jaccard ppm."""
+    # fan_out: the word explode + per-word md5 + 64-sum partial agg all
+    # fuse into the scan stage, which is ONE task at fixture scale
+    # (round-14 probe: votes noop 2.66s serial -> 0.85s fanned, -68%).
+    docs = fan_out(load_table(spark, sf_dir, "documents"), "doc_id")
+    words = (
+        docs.select(
+            "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
+        )
+        .groupBy("doc_id", "w")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    )
+    # Round 15 (VERDICT r14 #3 — full-pipeline packed votes): the r8c-r14
+    # pipeline extracted 16 hex digits per word (16 conv+substring), ran
+    # 64 per-bit vote SUMs, concatenated a 64-char '0'/'1' fingerprint
+    # string through 64 CASE branches, and re-parsed it into the two
+    # packed 32-bit halves — ~10s of one-time planning/codegen per fresh
+    # JVM (cold first pass 12.9s vs 3.0s warm, measured r15). The packed
+    # form computes the SAME w1/w2 words end-to-end:
+    #
+    # - per word: the 64 md5 bits as TWO 32-bit halves (hi = hex chars
+    #   1-8, lo = chars 9-16); bit j (j//4 = hex char k, j%4 = bit s of
+    #   that digit) is (hi >> (4*(7-k) + s)) & 1 for k <= 7, same on lo
+    #   for k >= 8 — exactly conv(substring(md5(w), k+1, 1), 16, 10)'s
+    #   bit s.
+    # - votes: ``_packed_votes`` with weight cnt, so n is the doc word
+    #   count W = SUM(cnt) and sign(s_j) >= 0 <=> 2*t_j >= W.
+    # - w1/w2: bit j of the fingerprint ('1' iff s_j >= 0) lands at
+    #   position 31-j of w1 (j < 32) / 63-j of w2 — bit-identical to
+    #   conv(substring(fp, 1|33, 32), 2, 10) over the string form (the
+    #   DuckDB oracle keeps the string pipeline; pinned by
+    #   tests/test_llm_ops.py::test_simhash_packed_votes_bit_equality).
+    # - band keys: the 4 x 16-char fp substrings become the 4 x 16-bit
+    #   integer slices of w1/w2 — same bucket partition, and the capping
+    #   window orders by doc_id only, so buckets, capping, candidates and
+    #   every surfaced value are unchanged.
+    m16 = F.lit(0xFFFF)
+
+    def _bit(j: int):
+        k, s = j // 4, j % 4
+        src = F.col("hi") if k <= 7 else F.col("lo")
+        off = 4 * (7 - k) + s if k <= 7 else 4 * (15 - k) + s
+        return F.shiftright(src, off).bitwiseAND(F.lit(1))
+
+    digs = words.select(
+        "doc_id",
+        "cnt",
+        F.expr("CAST(conv(substring(md5(w), 1, 8), 16, 10) AS BIGINT)").alias("hi"),
+        F.expr("CAST(conv(substring(md5(w), 9, 8), 16, 10) AS BIGINT)").alias("lo"),
+    )
+    votes = _packed_votes(digs, lambda j: F.col("cnt") * _bit(j), F.sum("cnt"))
+
+    def _word(bits: range):
+        # bit j contributes at position (31 - (j % 32)) of its word
+        return sum(
+            (
+                F.shiftleft(
+                    (2 * _lane(j) >= F.col("__n")).cast("bigint"),
+                    31 - (j % 32),
+                )
+                for j in bits
+            ),
+            F.lit(0).cast("bigint"),
+        )
+
+    fp = votes.select(
+        "doc_id",
+        _word(range(0, 32)).alias("w1"),
+        _word(range(32, 64)).alias("w2"),
+    )
+    bands = fp.select(
+        "doc_id",
+        "w1",
+        "w2",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("band"),
+                        F.shiftright(
+                            F.col("w1") if b < 2 else F.col("w2"),
+                            16 * (1 - b % 2),
+                        )
+                        .bitwiseAND(m16)
+                        .alias("key"),
+                    )
+                    for b in range(SIMHASH2_BANDS)
+                ]
+            )
+        ).alias("bk"),
+    ).select(
+        "doc_id", "w1", "w2", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+    capped = _cap_first(bands, ["band", "key"], "doc_id", SIMHASH2_BUCKET_CAP)
+    hamming = F.expr("bit_count(w1_1 ^ w1_2) + bit_count(w2_1 ^ w2_2)")
+    # Row-local C(k,2) pair explode over the CAPPED buckets (<= 64
+    # members by construction — the r9e idiom's win condition, re-landed
+    # round 10): the cap's row_number window already shuffled on
+    # (band, key), so the groupBy reuses that partitioning and the pair
+    # generation runs inside codegen — replacing a (band, key) self-join
+    # that shuffled the banded fingerprints twice (A/B at sf0.1 warm:
+    # 10.05 -> 7.99s, BENCH_NOTES round-10b). Shared _bucket_pairs
+    # with the fingerprint as pair payload; the DuckDB oracle keeps its
+    # self-join formulation (the contract is on VALUES; the hash
+    # self-join is DuckDB's fast plan).
+    pairs = _bucket_pairs(
+        capped, ["band", "key"], "doc_id", payload_cols=("w1", "w2")
+    )
+    # cand feeds three consumers below (the candidate-doc semi list +
+    # the shared join + the final rejoin) and its lineage is the whole
+    # LSH half — checkpoint once; it is cap-bounded pairs, tiny.
+    cand = (
+        pairs
+        .withColumn("hamming", hamming.cast("bigint"))
+        .filter(F.col("hamming") <= SIMHASH2_HAM_MAX)
+        .select("d1", "d2", "hamming")
+        .localCheckpoint()
+    )
+    # exact 3-gram jaccard verify (the minhash-portable contract).
+    # Round 14 (guide §2.3/§3.2 — shuffle fewer bytes, semi-join
+    # pre-filter): shingles are generated ONLY for docs appearing in a
+    # candidate pair. The verify consumers (sizes, both join sides) are
+    # all inner-joined to cand's d1/d2, so restricting the generation to
+    # candidate docs is value-identical — previously the 3-gram explode +
+    # distinct + eager checkpoint ran over the WHOLE corpus and the
+    # (d2, s) join shuffled the full shingle relation, for a
+    # cap-bounded handful of pairs.
+    shingles = _word_trigrams(docs.join(_pair_docs(cand), "doc_id", "left_semi"))
+    return (
+        _verify_jaccard_ppm(shingles, cand)
+        .filter(F.col("jaccard_ppm") >= SIMHASH2_JACCARD_PPM)
+        .orderBy("d1", "d2")
+    )
+
+
+QUERIES["dedup_simhash_portable"] = dedup_simhash_portable
+
+
+def _simhash2_oracle() -> str:
+    vote_cols = ", ".join(
+        f"SUM(cnt * (2 * ((v{j // 4} >> {j % 4}) & 1) - 1)) AS s{j}"
+        for j in range(64)
+    )
+    fp_concat = " || ".join(
+        f"CASE WHEN s{j} >= 0 THEN '1' ELSE '0' END" for j in range(64)
+    )
+    dig_cols = ", ".join(
+        f"strpos('0123456789abcdef', substr(md5(w), {k + 1}, 1)) - 1"
+        f" AS v{k}"
+        for k in range(16)
+    )
+    ham = " + ".join(
+        f"CASE WHEN substr(a.fp, {j + 1}, 1) != substr(b.fp, {j + 1}, 1)"
+        " THEN 1 ELSE 0 END"
+        for j in range(64)
+    )
+    band_union = " UNION ALL ".join(
+        f"SELECT doc_id, fp, {b} AS band,"
+        f" substr(fp, {16 * b + 1}, 16) AS key FROM psh_fp"
+        for b in range(SIMHASH2_BANDS)
+    )
+    return f"""
+    CREATE OR REPLACE TEMP TABLE psh_words AS
+        SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w
+              FROM documents)
+        GROUP BY doc_id, w;
+    CREATE OR REPLACE TEMP TABLE psh_digs AS
+        SELECT doc_id, cnt, {dig_cols}
+        FROM psh_words;
+    CREATE OR REPLACE TEMP TABLE psh_votes AS
+        SELECT doc_id, {vote_cols}
+        FROM psh_digs GROUP BY doc_id;
+    CREATE OR REPLACE TEMP TABLE psh_fp AS
+        SELECT doc_id, {fp_concat} AS fp FROM psh_votes;
+    CREATE OR REPLACE TEMP TABLE psh_capped AS
+        SELECT doc_id, fp, band, key FROM (
+            SELECT *, ROW_NUMBER() OVER (PARTITION BY band, key
+                                         ORDER BY doc_id) AS rn
+            FROM ({band_union}))
+        WHERE rn <= {SIMHASH2_BUCKET_CAP};
+    CREATE OR REPLACE TEMP TABLE psh_cand AS
+        SELECT d1, d2, CAST(hamming AS BIGINT) AS hamming FROM (
+            SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
+                   a.fp, b.fp AS fp2, {ham} AS hamming
+            FROM psh_capped a
+            JOIN psh_capped b
+              ON b.band = a.band AND b.key = a.key
+             AND a.doc_id < b.doc_id)
+        WHERE hamming <= {SIMHASH2_HAM_MAX};
+    {_trigram_table_sql("psh_sh")}
+    {_verify_ctes_sql("psh_sh", "psh_cand")}
+    SELECT c.d1, c.d2, c.hamming,
+           CAST(CAST(COALESCE(sh.shared, 0) AS HUGEINT) * 1000000
+                // (n1.n + n2.n - COALESCE(sh.shared, 0)) AS BIGINT)
+               AS jaccard_ppm
+    FROM psh_cand c
+    LEFT JOIN shared sh ON sh.d1 = c.d1 AND sh.d2 = c.d2
+    JOIN sizes n1 ON n1.doc_id = c.d1
+    JOIN sizes n2 ON n2.doc_id = c.d2
+    WHERE CAST(COALESCE(sh.shared, 0) AS HUGEINT) * 1000000
+          // (n1.n + n2.n - COALESCE(sh.shared, 0))
+          >= {SIMHASH2_JACCARD_PPM}
+    ORDER BY c.d1, c.d2
+"""
+
+
+ORACLES["dedup_simhash_portable"] = _simhash2_oracle()
+
+
+def dedup_minhash_estimator_audit(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """MinHash ESTIMATOR-QUALITY audit: for the portable pipeline's
+    candidate pairs, the signature-agreement estimate (matching
+    signatures / K — the statistic LSH actually thresholds on at
+    scale) side-by-side with the exact shingle Jaccard, and their
+    signed error — all integral (match counts and ppm ratios), so the
+    estimator's bias/variance on THIS corpus is a value-hash-checked
+    artifact rather than folklore. The decision every LSH deployment
+    owes its curator: how wrong is K=8 here?
+
+    Candidates come from an uncapped join on the band key alone (no
+    band number, no bucket cap), exactly as the oracle states.
+    """
+    shingles = _word_trigrams(load_table(spark, sf_dir, "documents"))
+    bands = _md5_signatures(shingles).select(
+        "doc_id",
+        *[F.col(f"sig{k}") for k in range(PORTABLE_MINHASH_K)],
+        F.explode(
+            F.array(
+                *[
+                    F.concat(
+                        F.col(f"sig{2 * b}"), F.col(f"sig{2 * b + 1}")
+                    )
+                    for b in range(PORTABLE_MINHASH_BANDS)
+                ]
+            )
+        ).alias("key"),
+    )
+    a = bands.alias("a")
+    b = bands.alias("b")
+    matches = sum(
+        (F.col(f"a.sig{k}") == F.col(f"b.sig{k}")).cast("int")
+        for k in range(PORTABLE_MINHASH_K)
+    )
+    cand = (
+        a.join(
+            b,
+            (F.col("a.key") == F.col("b.key"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("d1"),
+            F.col("b.doc_id").alias("d2"),
+            matches.cast("bigint").alias("sig_matches"),
+        )
+        .distinct()
+    )
+    return (
+        _verify_jaccard_ppm(shingles, cand)
+        .select(
+            "d1",
+            "d2",
+            "sig_matches",
+            F.expr(
+                f"sig_matches * 1000000 div {PORTABLE_MINHASH_K}"
+            ).alias("estimate_ppm"),
+            F.col("jaccard_ppm").alias("exact_ppm"),
+        )
+        .select(
+            "*",
+            (F.col("estimate_ppm") - F.col("exact_ppm")).alias(
+                "error_ppm"
+            ),
+        )
+        .orderBy("d1", "d2")
+    )
+
+
+QUERIES["dedup_minhash_estimator_audit"] = dedup_minhash_estimator_audit
+
+
+def _estimator_oracle() -> str:
+    sig_cols = ", ".join(
+        f"MIN(md5('{k}:' || s)) AS sig{k}"
+        for k in range(PORTABLE_MINHASH_K)
+    )
+    band_union = " UNION ALL ".join(
+        f"SELECT doc_id, {', '.join(f'sig{k}' for k in range(PORTABLE_MINHASH_K))},"
+        f" sig{2*b} || sig{2*b+1} AS key FROM est_sig"
+        for b in range(PORTABLE_MINHASH_BANDS)
+    )
+    match_sum = " + ".join(
+        f"CASE WHEN a.sig{k} = b.sig{k} THEN 1 ELSE 0 END"
+        for k in range(PORTABLE_MINHASH_K)
+    )
+    return f"""
+    {_trigram_table_sql("est_sh")}
+    CREATE OR REPLACE TEMP TABLE est_sig AS
+        SELECT doc_id, {sig_cols}
+        FROM est_sh GROUP BY doc_id;
+    CREATE OR REPLACE TEMP TABLE est_bands AS
+        {band_union};
+    CREATE OR REPLACE TEMP TABLE est_cand AS
+        SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2,
+               CAST({match_sum} AS BIGINT) AS sig_matches
+        FROM est_bands a
+        JOIN est_bands b
+          ON b.key = a.key AND a.doc_id < b.doc_id;
+    {_verify_ctes_sql("est_sh", "est_cand")},
+    scored AS (
+        SELECT c.d1, c.d2, c.sig_matches,
+               c.sig_matches * 1000000 // {PORTABLE_MINHASH_K}
+                   AS estimate_ppm,
+               CAST(CAST(COALESCE(sh.shared, 0) AS HUGEINT) * 1000000
+                    // (n1.n + n2.n - COALESCE(sh.shared, 0)) AS BIGINT)
+                   AS exact_ppm
+        FROM est_cand c
+        LEFT JOIN shared sh ON sh.d1 = c.d1 AND sh.d2 = c.d2
+        JOIN sizes n1 ON n1.doc_id = c.d1
+        JOIN sizes n2 ON n2.doc_id = c.d2)
+    SELECT d1, d2, sig_matches, estimate_ppm, exact_ppm,
+           estimate_ppm - exact_ppm AS error_ppm
+    FROM scored
+    ORDER BY d1, d2
+"""
+
+
+ORACLES["dedup_minhash_estimator_audit"] = _estimator_oracle()
+
+
+# Threshold sweep grid (ppm) for the dedup ROC: how many pairs (and
+# docs) each candidate Jaccard cutoff would merge.
+DEDUP_SWEEP_PPM = (100_000, 200_000, 300_000, 400_000, 500_000)
+
+
+def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Threshold-selection evidence for near-dup cleanup: for each
+    candidate Jaccard cutoff, the number of 3-gram near-dup pairs at
+    or above it and the number of distinct documents those pairs
+    touch — the dedup analog of the PR sweep, ONE pass over the exact
+    pair scores (every threshold is a conditional sum over the same
+    relation, so adding thresholds widens the aggregate, not the
+    passes). Pairs come from the same inverted-index self-join as
+    ``dedup_ngram_jaccard`` with the shared-shingle >= 1 floor, over
+    the portable string shingles.
+    """
+    shingles = _word_trigrams(load_table(spark, sf_dir, "documents"))
+    sizes = shingles.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    a = shingles.alias("a")
+    b = shingles.alias("b")
+    shared = (
+        a.join(
+            b,
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("shared"))
+    )
+    s1 = F.broadcast(
+        sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
+    )
+    s2 = F.broadcast(
+        sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
+    )
+    scored = (
+        shared.join(s1, "d1")
+        .join(s2, "d2")
+        .select("d1", "d2", _jaccard_ppm().alias("j_ppm"))
+        .localCheckpoint()  # one pair relation feeds every threshold
+    )
+    # each threshold reads the SAME checkpointed pair relation
+    out = None
+    for t in DEDUP_SWEEP_PPM:
+        hit = scored.filter(F.col("j_ppm") >= t)
+        docs_touched = (
+            hit.select(F.explode(F.array("d1", "d2")).alias("d"))
+            .agg(F.count_distinct("d").cast("bigint").alias("n_docs"))
+        )
+        pairs = hit.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_pairs")
+        )
+        row = (
+            pairs.crossJoin(docs_touched)
+            .select(
+                F.lit(t).cast("bigint").alias("threshold_ppm"),
+                "n_pairs",
+                "n_docs",
+            )
+        )
+        out = row if out is None else out.unionByName(row)
+    return out.orderBy("threshold_ppm")
+
+
+QUERIES["dedup_threshold_sweep"] = dedup_threshold_sweep
+
+ORACLES["dedup_threshold_sweep"] = f"""
+    {_trigram_table_sql("sw_sh")}
+    CREATE OR REPLACE TEMP TABLE sw_scored AS
+        WITH sizes AS (
+            SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n
+            FROM sw_sh GROUP BY doc_id),
+        shared AS (
+            SELECT a.doc_id AS d1, b.doc_id AS d2,
+                   CAST(COUNT(*) AS BIGINT) AS shared
+            FROM sw_sh a JOIN sw_sh b
+              ON b.s = a.s AND a.doc_id < b.doc_id
+            GROUP BY 1, 2)
+        SELECT sh.d1, sh.d2,
+               CAST(CAST(sh.shared AS HUGEINT) * 1000000
+                    // (n1.n + n2.n - sh.shared) AS BIGINT) AS j_ppm
+        FROM shared sh
+        JOIN sizes n1 ON n1.doc_id = sh.d1
+        JOIN sizes n2 ON n2.doc_id = sh.d2;
+    {" UNION ALL ".join(
+        f'''SELECT CAST({t} AS BIGINT) AS threshold_ppm,
+               CAST((SELECT COUNT(*) FROM sw_scored WHERE j_ppm >= {t})
+                    AS BIGINT) AS n_pairs,
+               CAST((SELECT COUNT(DISTINCT d) FROM (
+                       SELECT d1 AS d FROM sw_scored WHERE j_ppm >= {t}
+                       UNION ALL
+                       SELECT d2 FROM sw_scored WHERE j_ppm >= {t}))
+                    AS BIGINT) AS n_docs'''
+        for t in DEDUP_SWEEP_PPM
+    )}
+    ORDER BY threshold_ppm
 """

@@ -79,16 +79,27 @@ def test_no_query_name_collisions_across_modules():
 
     seen = {}
     for modname in e._MODULES:
-        try:
-            mod = importlib.import_module(modname)
-        except ModuleNotFoundError:
-            continue
+        mod = importlib.import_module(modname)
         for k in getattr(mod, "QUERIES", {}):
             assert k not in seen, f"{k} defined in both {seen[k]} and {modname}"
             seen[k] = modname
     oracles = e.oracle_sql()
     orphans = sorted(set(oracles) - set(seen))
     assert not orphans, f"oracles without queries: {orphans}"
+
+
+def test_collect_fails_loudly_on_missing_module(monkeypatch):
+    """A stale or broken ``_MODULES`` entry must raise from ``_collect``
+    rather than silently drop that module's queries from the contract."""
+    import pytest
+
+    import __spark_entry__ as e
+
+    monkeypatch.setattr(
+        e, "_MODULES", [*e._MODULES, "db_migrator_spark.operators.no_such_module"]
+    )
+    with pytest.raises(ModuleNotFoundError):
+        e._collect()
 
 
 def test_no_oracle_loss():

@@ -719,7 +719,7 @@ def test_portable_lsh_trio_no_cartesian(spark):
     blocked equi-joins like their fast siblings: candidates join on
     (band, key), verify joins on the shingle/dimension key."""
     from db_migrator_spark.operators.dedup import dedup_minhash_portable
-    from db_migrator_spark.operators.dedup2 import dedup_simhash_portable
+    from db_migrator_spark.operators.dedup import dedup_simhash_portable
     from db_migrator_spark.operators.similarity_lsh2 import (
         similarity_lsh_portable,
     )

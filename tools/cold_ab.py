@@ -20,9 +20,13 @@ import statistics
 import subprocess
 import sys
 
+# The checkout this script lives in: samples run its code, so a second
+# checkout's copy of this script A/Bs that checkout.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _CHILD = r"""
 import json, os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 os.environ.setdefault("SPARK_GRAFT_NO_DIAG", "1")
 name, sf_dir = sys.argv[1], sys.argv[2]
 import __spark_entry__ as em
@@ -47,7 +51,7 @@ def main() -> int:
     mins: list[float] = []
     for i in range(samples):
         out = subprocess.run(
-            [sys.executable, "-c", _CHILD, name, sf_dir],
+            [sys.executable, "-c", _CHILD, name, sf_dir, _ROOT],
             capture_output=True, text=True, timeout=600,
         )
         line = out.stdout.strip().splitlines()[-1]

@@ -11,10 +11,12 @@ name, rows sorted). Usage:
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _ROOT)
 
 
 def normalize(val) -> str:
@@ -63,8 +65,6 @@ def main() -> int:
     con.execute("SET max_temp_directory_size = '30GB'")
     from db_migrator_spark.io import TABLES
 
-    import os
-
     for t in TABLES:
         path = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(path):  # Spark-written datasets are directories
@@ -83,7 +83,7 @@ def main() -> int:
     import json
 
     ever_oracled: set[str] = set()
-    for path in glob.glob("/root/repo/CORRECTNESS_r*.json"):
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
         try:
             data = json.load(open(path))
         except Exception:
@@ -111,7 +111,11 @@ def main() -> int:
             failed.append(name)
             continue
         if name not in oracles:
-            print(f"ok*   {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
+            # The Spark-side hash lets two trees' rows-only results be diffed.
+            print(
+                f"ok*   {name}: rows-only ({len(srows)} rows, "
+                f"hash {table_hash(scols, srows)}, {time.time()-t0:.1f}s)"
+            )
             continue
         try:
             res = con.execute(oracles[name])
