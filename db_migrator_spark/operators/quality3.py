@@ -471,7 +471,9 @@ def _encoding_audit_oracle() -> str:
             "epoch_us(CAST(l_shipdate AS TIMESTAMP)) // 86400000000"
         ),
     }
-    numeric = {"l_suppkey", "l_quantity", "l_extendedprice", "l_shipdate"}
+    # A tuple in ``vals`` order, not a set: the generated SQL text must not
+    # depend on the process's hash seed.
+    numeric = ("l_suppkey", "l_quantity", "l_extendedprice", "l_shipdate")
     proj = ",\n                   ".join(
         f"{expr} AS v_{c}" for c, expr in vals.items()
     )

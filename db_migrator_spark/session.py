@@ -88,9 +88,11 @@ def _ship_package(spark: SparkSession) -> None:
         os.replace(tmp, zip_path)
     try:
         sc.addPyFile(zip_path)
-        sc._db_migrator_pkg_shipped = True
-    except Exception:
-        pass
+    except Exception as e:  # swallowed, it resurfaces as a worker ModuleNotFoundError
+        raise RuntimeError(
+            f"could not ship db_migrator_spark to Python workers: addPyFile({zip_path!r}) failed"
+        ) from e
+    sc._db_migrator_pkg_shipped = True
 
 
 def configure(spark: SparkSession) -> SparkSession:

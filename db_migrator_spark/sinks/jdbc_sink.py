@@ -7,6 +7,8 @@ multi-row packets server-side). This replaces the reference's hand-rolled
 byte-budget batch assembly (``src/migrate/table_migrator.rs:116-200``):
 Spark's writer is already transactional per partition and parallel across
 partitions, where the reference streams each table over one connection.
+The rows-written count is observed by that write job (``base.write_counted``),
+not taken by a driver-side ``SELECT COUNT(*)`` of the target afterwards.
 
 DDL path (CREATE TABLE with PK, constraint ALTERs, resets) cannot be
 expressed through the writer, so it executes driver-side over a raw JDBC
@@ -33,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..common.schema import TargetColumn
 from ..migrate import ddl
 from ..migrate.ddl import TableAction
+from .base import write_counted
 
 log = logging.getLogger(__name__)
 
@@ -138,8 +141,8 @@ class MySqlJdbcInserter:
         self._execute(ddl.build_create_table_query(table, schema))
 
     def write_table(self, df: DataFrame, table: str, schema: list[TargetColumn]) -> int:
-        (
-            df.write.format("jdbc")
+        return write_counted(df, lambda d: (
+            d.write.format("jdbc")
             .option("url", self.url)
             .option("user", self.user)
             .option("password", self.password)
@@ -151,8 +154,7 @@ class MySqlJdbcInserter:
             .option("sessionInitStatement", "SET FOREIGN_KEY_CHECKS=0")
             .mode("append")
             .save()
-        )
-        return self.table_rows_count(table)
+        ))
 
     def create_constraints(self, table: str, schema: list[TargetColumn],
                            migrated_tables: list[str]) -> None:

@@ -7,6 +7,8 @@ assert the exact DDL the reference would emit while the data path stays a
 distributed ``df.write.parquet``.
 
 Scale: the write is partition-parallel; rows never pass through the driver.
+The rows-written count is observed by the write job itself
+(``base.write_counted``): one Spark job per table, no read of the target.
 """
 
 from __future__ import annotations
@@ -20,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..common.schema import TargetColumn
 from ..migrate import ddl
 from ..migrate.ddl import TableAction
+from .base import write_counted
 
 log = logging.getLogger(__name__)
 
@@ -52,10 +55,14 @@ class ParquetInserter:
         return os.path.isdir(self._path(table))
 
     def table_rows_count(self, table: str) -> int:
-        try:
-            return self.spark.read.parquet(self._path(table)).count()
-        except Exception:
-            return 0  # directory exists but holds no dataset -> empty table
+        # create_table and TRUNCATE leave a directory with no data files,
+        # which Spark cannot infer a schema from: that is the empty table.
+        # Any other read error propagates, so unreadable rows never pass
+        # the migrator's emptiness guard.
+        path = self._path(table)
+        if all(f.startswith(("_", ".")) for f in os.listdir(path)):
+            return 0
+        return self.spark.read.parquet(path).count()
 
     def reset_tables(self, tables: list[str], action: TableAction) -> None:
         if not tables:
@@ -74,8 +81,7 @@ class ParquetInserter:
 
     def write_table(self, df: DataFrame, table: str, schema: list[TargetColumn]) -> int:
         self._record(ddl.build_insert_statement(table, schema))
-        df.write.mode("append").parquet(self._path(table))
-        return self.spark.read.parquet(self._path(table)).count()
+        return write_counted(df, lambda d: d.write.mode("append").parquet(self._path(table)))
 
     def create_constraints(self, table: str, schema: list[TargetColumn],
                            migrated_tables: list[str]) -> None:

@@ -190,3 +190,44 @@ def test_driver_window_budget():
             f"attestation debt past {budget}: drain first "
             f"(drain schedule: __spark_entry__ module docstring)"
         )
+
+
+def test_oracle_sql_independent_of_hash_seed():
+    """The oracle text is part of the contract; two processes with
+    different hash seeds must generate the same SQL."""
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys; sys.path.insert(0, sys.argv[1]); import __spark_entry__ as e; "
+        "sys.stdout.write(e.oracle_sql()['q_encoding_audit'])"
+    )
+    texts = []
+    for seed in ("1", "2"):
+        proc = subprocess.run(
+            [sys.executable, "-c", code, root], capture_output=True, text=True,
+            timeout=300, env={**os.environ, "PYTHONHASHSEED": seed},
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        texts.append(proc.stdout)
+    assert texts[0] and texts[0] == texts[1]
+
+
+def test_ship_package_fails_loudly():
+    """A failed ``addPyFile`` must raise at session set-up, naming the zip,
+    rather than surface later as a worker-side ModuleNotFoundError."""
+    import types
+
+    import pytest
+
+    from db_migrator_spark import session
+
+    class RefusingContext:
+        def addPyFile(self, path):
+            raise OSError("refused")
+
+    sc = RefusingContext()
+    with pytest.raises(RuntimeError, match=r"db_migrator_spark-[0-9a-f]{12}\.zip") as ei:
+        session._ship_package(types.SimpleNamespace(sparkContext=sc))
+    assert isinstance(ei.value.__cause__, OSError)
+    assert not getattr(sc, "_db_migrator_pkg_shipped", False)

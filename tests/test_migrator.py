@@ -7,11 +7,14 @@ seams, plus a real migration of the driver-generated testdata.
 
 import json
 import os
+import threading
+import uuid
 
 import pytest
 
 from db_migrator_spark.common.schema import TableConstraints
 from db_migrator_spark.migrate.ddl import TableAction
+from db_migrator_spark.migrate.schema_mapper import map_schema
 from db_migrator_spark.migrate.migrator import (
     DatabaseMigrator,
     MigrationOptions,
@@ -294,3 +297,122 @@ def test_real_testdata_migration(spark, tmp_path):
     assert by_name["nation"].rows_migrated == 25
     got = spark.read.parquet(os.path.join(tgt, "customer"))
     assert set(got.columns) == {"c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"}
+
+
+# -- write_table: the count comes from the write job -------------------------
+
+def users_target(spark, src, tgt):
+    """An extractor over a one-table ``Users`` source and an inserter whose
+    ``Users`` target has been created, as the migrator leaves it."""
+    extractor = ParquetExtractor(spark, src)
+    schema = map_schema(
+        TypeRegistry.with_defaults(), "Users", extractor.get_table_schema("Users"), False
+    )
+    inserter = ParquetInserter(spark, tgt)
+    inserter.create_table("Users", schema)
+    return extractor, inserter, schema
+
+
+def test_write_table_is_one_job_counted_by_the_write(spark, dirs):
+    src, tgt = dirs
+    write_source(spark, src, "Users", [(i, f"u{i}") for i in range(500)],
+                 "id int, name string")
+    extractor, inserter, schema = users_target(spark, src, tgt)
+    df = extractor.read_table("Users")  # schema inference stays outside the group
+    sc = spark.sparkContext
+    group = f"write-table-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "write_table")
+    try:
+        rows = inserter.write_table(df, "Users", schema)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert rows == 500 == spark.read.parquet(os.path.join(tgt, "Users")).count()
+
+
+def _zero_row_group_source(spark, src):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = os.path.join(src, "empty.parquet")
+    # A writer closed before any batch: schema only, no row group at all
+    # (pq.write_table of an empty table still writes one empty group).
+    pq.ParquetWriter(path, pa.schema([("id", pa.int32()), ("name", pa.string())])).close()
+    assert pq.ParquetFile(path).num_row_groups == 0
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("make, expected", [
+    (_zero_row_group_source, 0),
+    (lambda spark, src: spark.createDataFrame([], "id int, name string"), 0),
+    (lambda spark, src: spark.range(0).selectExpr("CAST(id AS INT) AS id",
+                                                  "CAST(id AS STRING) AS name"), 0),
+    (lambda spark, src: spark.createDataFrame([(1, "a"), (2, "b")], "id int, name string")
+     .filter("id < 0"), 0),
+    (lambda spark, src: spark.createDataFrame([(1, "a")], "id int, name string"), 1),
+], ids=["zero-row-groups", "empty-local", "range-0", "filter-to-empty", "one-row"])
+def test_write_table_counts_degenerate_inputs(spark, dirs, make, expected):
+    src, tgt = dirs
+    write_source(spark, src, "Users", [(1, "a")], "id int, name string")
+    _, inserter, schema = users_target(spark, src, tgt)
+    df = make(spark, src)
+    got = []
+    # A daemon thread with a deadline: an observed metric that never
+    # arrives would otherwise block this test forever inside ``obs.get``.
+    t = threading.Thread(
+        target=lambda: got.append(inserter.write_table(df, "Users", schema)), daemon=True
+    )
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "write_table blocked waiting for its observed count"
+    assert got == [expected]
+    assert spark.read.parquet(os.path.join(tgt, "Users")).count() == expected
+    assert inserter.table_rows_count("Users") == expected
+
+
+def test_unreadable_target_is_not_an_empty_table(spark, dirs):
+    """A target directory holding a corrupt data file must fail the
+    emptiness guard loudly, not read as zero rows and get appended to."""
+    src, tgt = dirs
+    write_source(spark, src, "Users", [(1, "a")], "id int, name string")
+    table_dir = os.path.join(tgt, "Users")
+    os.makedirs(table_dir)
+    bad = os.path.join(table_dir, "part-00000-corrupt.snappy.parquet")
+    with open(bad, "wb") as f:
+        f.write(b"this is not a parquet file")
+    inserter = ParquetInserter(spark, tgt)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        inserter.table_rows_count("Users")
+    migrator = DatabaseMigrator(ParquetExtractor(spark, src), inserter,
+                                options=MigrationOptions(format_names=False, all_tables=True))
+    migrator._reset_existing_targets = lambda tables: None  # keep the file in place
+    with pytest.raises(MigrationRunError):
+        migrator.run()
+    assert os.listdir(table_dir) == [os.path.basename(bad)]
+
+
+def test_hidden_files_only_is_an_empty_table(spark, dirs):
+    _, tgt = dirs
+    table_dir = os.path.join(tgt, "Users")
+    os.makedirs(table_dir)
+    for name in ("_SUCCESS", "._SUCCESS.crc"):
+        open(os.path.join(table_dir, name), "w").close()
+    assert ParquetInserter(spark, tgt).table_rows_count("Users") == 0
+
+
+def test_write_counted_counts_a_jdbc_write(spark):
+    """``MySqlJdbcInserter.write_table``'s count: the same helper around
+    Spark's JDBC writer, here into an in-process Derby database."""
+    from db_migrator_spark.sinks.base import write_counted
+
+    url = f"jdbc:derby:memory:wc{uuid.uuid4().hex};create=true"
+
+    def write(d):
+        (d.write.format("jdbc").option("url", url).option("dbtable", "T")
+         .option("driver", "org.apache.derby.jdbc.EmbeddedDriver").mode("append").save())
+
+    df = spark.range(300).repartition(3).selectExpr("id", "CAST(id AS STRING) AS s")
+    assert write_counted(df, write) == 300
+    assert write_counted(df.filter("id < 0"), write) == 0
+    got = spark.read.format("jdbc").option("url", url).option("dbtable", "T").load()
+    assert got.count() == 300
